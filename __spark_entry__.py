@@ -53,9 +53,12 @@ class _scoped_conf:
         self.spark, self.confs, self.saved = spark, confs, {}
 
     def __enter__(self):
+        explicit = self.spark.conf.getAll
         for k, v in self.confs.items():
             key = k.replace("__", ".")
-            self.saved[key] = self.spark.conf.get(key, None)
+            # a key the session never set restores to unset, not to a pinned
+            # copy of its effective default
+            self.saved[key] = explicit.get(key)
             self.spark.conf.set(key, v)
 
     def __exit__(self, *exc):
@@ -1838,9 +1841,18 @@ def q_lake_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = tempfile.mkdtemp(prefix="dsx-travel-")
     t = LakeTable.create(spark, root, schema, bucket_key="user_id", n_buckets=8)
     ch = _derived_changes(spark, sf_dir)
-    for parity in (0, 1):
+    # The oracle folds the whole feed by global seq, but version 2 is the
+    # odd-seq layer over version 1 (newest layer wins). The two agree only
+    # while the halves share no (user_id, turn_idx) key — true because
+    # turn_idx = event_id % 100 has the parity of seq = event_id.
+    halves = [ch.filter(F.pmod(F.col("seq"), F.lit(2)) == p) for p in (0, 1)]
+    keys = ["user_id", "turn_idx"]
+    if not halves[0].select(*keys).intersect(halves[1].select(*keys)).isEmpty():
+        raise AssertionError("even/odd seq halves share (user_id, turn_idx) keys: "
+                             "the time-travel oracle no longer holds")
+    for half in halves:
         t.apply_cdc_stats(
-            ch.filter(F.pmod(F.col("seq"), F.lit(2)) == parity),
+            half,
             key_cols=["user_id", "turn_idx"], op_col="op", seq_col="seq",
             write_mode="mor", compact_threshold=1000,
         )

@@ -76,16 +76,20 @@ _HINT_NAME = "LATEST"
 
 # --------------------------------------------------------------- task steering
 #
-# ``df.repartition(n, col)`` places rows by pmod(murmur3(col), n): with B
-# buckets steered onto ~B partitions, balls-in-bins collisions put 2-4 buckets
-# on some tasks and none on others, and the workaround of 4x over-partitioning
-# trades balance for hundreds of near-empty Python tasks whose fixed cost
-# (worker round-trip + Arrow setup, measured ~100-250 ms each) dominates the
-# stage. Instead we make placement EXACT: assign buckets to
-# min(defaultParallelism, B) tasks with size-aware greedy LPT packing, then
-# steer each bucket to its task through a precomputed "magic" integer whose
-# Murmur3 hash lands on exactly that partition. One balanced wave of tasks, no
-# collisions, no empties — the same trick works at 4 or 4000 cores.
+# Bucket work is packed onto min(defaultParallelism, B) tasks with size-aware
+# greedy LPT, so one balanced wave of tasks runs with no collisions and no
+# empties (hash placement would put 2-4 buckets on some tasks and none on
+# others; over-partitioning trades that for near-empty Python tasks whose
+# fixed cost dominates the stage). Two ways reach that placement:
+#
+# - KERNEL LAUNCHES (apply_cdc_files, compact, merge-on-read scans) need only
+#   a task index: row t of ``spark.range(0, n, 1, n)`` sits in partition t, so
+#   task t looks up its bucket list ``groups[t]`` in the closure. One job, one
+#   stage, no exchange.
+# - DATA SHUFFLES (the fused MERGE route, full rewrites) must move rows to
+#   their bucket's task: each bucket is tagged with a precomputed "magic"
+#   integer whose Murmur3 hash lands on exactly that task's partition under
+#   ``repartition(n, col)``.
 
 
 def _murmur3_int32(x: int, seed: int = 42) -> int:
@@ -141,6 +145,14 @@ def _assign_buckets_lpt(buckets: list[int], sizes: dict[int, int] | None,
     return assign
 
 
+def _task_groups(assign: dict[int, int], n_tasks: int) -> list[list[int]]:
+    """Invert a bucket -> task assignment into per-task bucket lists."""
+    groups: list[list[int]] = [[] for _ in range(n_tasks)]
+    for b, t in assign.items():
+        groups[t].append(b)
+    return groups
+
+
 def _steer_expr(assign: dict[int, int], magic: list[int]) -> F.Column:
     """Map the bucket column to its task's magic partition-steering value.
 
@@ -153,6 +165,17 @@ def _steer_expr(assign: dict[int, int], magic: list[int]) -> F.Column:
     return F.expr(
         f"CAST(element_at(map({entries}), `{_BUCKET_COL}`) AS INT)"
     )
+
+
+# one row per written file or quarantine reason, as every MERGE kernel
+# (aligned, fused, compaction) reports back to the driver
+_ENTRY_STRUCT = T.StructType(
+    [T.StructField("bucket", T.IntegerType()), T.StructField("path", T.StringType()),
+     T.StructField("rows", T.LongType()), T.StructField("events", T.LongType()),
+     T.StructField("min_seq", T.LongType()), T.StructField("max_seq", T.LongType()),
+     T.StructField("reason", T.StringType()), T.StructField("kind", T.StringType()),
+     T.StructField("stats", T.StringType())]
+)
 
 
 def _arrow_schema_for(schema: T.StructType):
@@ -1403,9 +1426,10 @@ class LakeTable:
         """Keyed point reads: the GetRow / PK-point analog of otsreader.
 
         The requested bucket-key values are hashed to their buckets with the
-        SAME expression the write path uses (one trivial local job over the
-        key list — exact by construction, no driver-side hash reimplementation
-        to drift), then ONLY those buckets' files are read (manifest pruning)
+        SAME expression the write path uses, over an Arrow-backed local key
+        frame that Spark folds on the driver (no job runs; exact by
+        construction, no driver-side hash reimplementation to drift), then
+        ONLY those buckets' files are read (manifest pruning)
         and filtered to the exact keys. Cost is O(requested buckets), never
         O(table): at 4096 buckets a single-conversation lookup opens ~1/4096
         of the data files regardless of table size.
@@ -1415,9 +1439,12 @@ class LakeTable:
             return self.spark.createDataFrame(
                 [], self._projected_struct(self.snapshot(version), columns))
         snap = self.snapshot(version)
-        key_field = snap.schema[snap.bucket_key]
+        import pyarrow as pa
+
+        key_struct = T.StructType([snap.schema[snap.bucket_key]])
         kdf = self.spark.createDataFrame(
-            [(k,) for k in keys], T.StructType([key_field]))
+            pa.Table.from_pydict({snap.bucket_key: keys},
+                                 schema=_arrow_schema_for(key_struct)))
         buckets = sorted({
             r[0] for r in kdf.select(self._bucket_expr(snap).alias("b")).collect()
         })
@@ -1439,10 +1466,25 @@ class LakeTable:
             return snap.schema
         return T.StructType([snap.schema[c] for c in columns])
 
+    def _run_bucket_tasks(self, buckets: list[int], sizes: dict[int, int] | None,
+                          kernel, schema) -> DataFrame:
+        """Run ``kernel(my_buckets)`` (a generator of Arrow batches) once per
+        task over an LPT packing of ``buckets``, seeded by ``spark.range`` so
+        the launch is the kernel stage alone (see "task steering" above)."""
+        n_tasks = min(len(buckets), max(self.spark.sparkContext.defaultParallelism, 1))
+        groups = _task_groups(_assign_buckets_lpt(buckets, sizes, n_tasks), n_tasks)
+
+        def run(batches):
+            for batch in batches:
+                for t in batch.column(0).to_pylist():
+                    yield from kernel(groups[t])
+
+        return self.spark.range(0, n_tasks, 1, n_tasks).mapInArrow(run, schema=schema)
+
     def _read_merged(self, snap: Snapshot, buckets: Iterable[int] | None,
                      columns: list[str] | None = None,
                      key_filter: dict | None = None) -> DataFrame:
-        """Distributed merge-on-read: one steered task set resolves each
+        """Distributed merge-on-read: one range-seeded task set resolves each
         bucket's base ∪ delta layers (newest-gen-wins cascade, deletes
         dropped) and streams the live rows back as the snapshot schema.
 
@@ -1499,9 +1541,6 @@ class LakeTable:
         items = [b for b in items if file_map[b]]
         if not items:
             return self.spark.createDataFrame([], self._projected_struct(snap, columns))
-        n_tasks = min(len(items), max(self.spark.sparkContext.defaultParallelism, 1))
-        assign = _assign_buckets_lpt(items, sizes, n_tasks)
-        magic = _partition_magic(n_tasks)
         internal_set = set(internal_cols)
         internal_struct = T.StructType(
             [f for f in snap.schema.fields if f.name in internal_set]
@@ -1511,14 +1550,11 @@ class LakeTable:
         out_struct = T.StructType([snap.schema[c] for c in out_cols])
         out_target = _arrow_schema_for(out_struct)
 
-        def read_merge(batches):
+        def read_merge(my_buckets):
             import pyarrow as pa
             import pyarrow.compute as pc
             import pyarrow.parquet as pq
 
-            my_buckets = []
-            for batch in batches:
-                my_buckets.extend(batch.column(0).to_pylist())
             kf = (None if key_filter is None else [
                 (c, "in", list(vs)) for c, vs in key_filter.items()
             ])
@@ -1610,13 +1646,7 @@ class LakeTable:
                 if merged.num_rows:
                     yield from merged.to_batches()
 
-        seed = self.spark.createDataFrame(
-            [(b, magic[assign[b]]) for b in items], "b int, pid int"
-        )
-        return (
-            seed.repartition(n_tasks, F.col("pid"))
-            .mapInArrow(read_merge, schema=out_struct)
-        )
+        return self._run_bucket_tasks(items, sizes, read_merge, out_struct)
 
     # ----------------------------------------------------------------- writes
 
@@ -2610,32 +2640,13 @@ class LakeTable:
                 out.extend(process_bucket(b, ev, bucket_files.get(b, [])))
             if out:
                 yield pa.RecordBatch.from_pylist(
-                    out,
-                    schema=pa.schema(
-                        [
-                            ("bucket", pa.int32()),
-                            ("path", pa.string()),
-                            ("rows", pa.int64()),
-                            ("events", pa.int64()),
-                            ("min_seq", pa.int64()),
-                            ("max_seq", pa.int64()),
-                            ("reason", pa.string()),
-                            ("kind", pa.string()),
-                            ("stats", pa.string()),
-                        ]
-                    ),
-                )
+                    out, schema=_arrow_schema_for(_ENTRY_STRUCT))
 
         entries = (
             src_aligned.withColumn(_PID_COL, _steer_expr(assign, magic))
             .repartition(n_tasks, F.col(_PID_COL))
             .drop(_PID_COL)
-            .mapInArrow(
-                merge_partition,
-                schema="bucket int, path string, rows long, events long, "
-                       "min_seq long, max_seq long, reason string, kind string, "
-                       "stats string",
-            )
+            .mapInArrow(merge_partition, schema=_ENTRY_STRUCT)
             .collect()
         )
         return _collect_apply_entries(entries, next_gen)
@@ -2755,9 +2766,6 @@ class LakeTable:
             + 1
             for b in steered
         }
-        n_tasks = min(len(steered), max(self.spark.sparkContext.defaultParallelism, 1))
-        assign = _assign_buckets_lpt(steered, sizes, n_tasks)
-        magic = _partition_magic(n_tasks)
         process_bucket = _make_bucket_processor(
             payload_cols, key_cols, seq_col, op_col, delete_op,
             write_mode, compact_threshold, staging, staging_rel,
@@ -2766,7 +2774,7 @@ class LakeTable:
         )
         qdir = quarantine_dir
 
-        def aligned_apply(batches):
+        def aligned_apply(my):
             import os as _os
             import uuid as _uuid
 
@@ -2774,9 +2782,6 @@ class LakeTable:
             import pyarrow.compute as pc
             import pyarrow.parquet as pq
 
-            my: list[int] = []
-            for batch in batches:
-                my.extend(batch.column(0).to_pylist())
             out = []
             for b in my:
                 tabs = []
@@ -2833,35 +2838,10 @@ class LakeTable:
                     out.extend(process_bucket(b, ev, bucket_files.get(b, [])))
             if out:
                 yield pa.RecordBatch.from_pylist(
-                    out,
-                    schema=pa.schema(
-                        [
-                            ("bucket", pa.int32()),
-                            ("path", pa.string()),
-                            ("rows", pa.int64()),
-                            ("events", pa.int64()),
-                            ("min_seq", pa.int64()),
-                            ("max_seq", pa.int64()),
-                            ("reason", pa.string()),
-                            ("kind", pa.string()),
-                            ("stats", pa.string()),
-                        ]
-                    ),
-                )
+                    out, schema=_arrow_schema_for(_ENTRY_STRUCT))
 
-        seed = self.spark.createDataFrame(
-            [(b, magic[assign[b]]) for b in steered], "b int, pid int"
-        )
-        entries = (
-            seed.repartition(n_tasks, F.col("pid"))
-            .mapInArrow(
-                aligned_apply,
-                schema="bucket int, path string, rows long, events long, "
-                       "min_seq long, max_seq long, reason string, kind string, "
-                       "stats string",
-            )
-            .collect()
-        )
+        entries = self._run_bucket_tasks(
+            steered, sizes, aligned_apply, _ENTRY_STRUCT).collect()
         new_files, stats = _collect_apply_entries(entries, snap.version + 1)
         return self._finish_apply(
             snap, new_files, stats, properties, pre_commit, key_cols, op_col,
@@ -2947,9 +2927,6 @@ class LakeTable:
             if str(b) in snap.files
         }
         sizes = {b: sum(f["rows"] for f in snap.files[str(b)]) + 1 for b in todo}
-        n_tasks = min(len(todo), max(self.spark.sparkContext.defaultParallelism, 1))
-        assign = _assign_buckets_lpt(todo, sizes, n_tasks)
-        magic = _partition_magic(n_tasks)
         seq_col = "_cseq"
         process_bucket = _make_bucket_processor(
             payload_cols, key_cols, seq_col, op_col, delete_op,
@@ -2959,12 +2936,9 @@ class LakeTable:
             agg_spec=_agg_spec_of(snap),
         )
 
-        def compact_task(batches):
+        def compact_task(my):
             import pyarrow as pa
 
-            my: list[int] = []
-            for batch in batches:
-                my.extend(batch.column(0).to_pylist())
             out = []
             empty = pa.table(
                 {
@@ -2977,35 +2951,10 @@ class LakeTable:
                 out.extend(process_bucket(b, empty, bucket_files.get(b, [])))
             if out:
                 yield pa.RecordBatch.from_pylist(
-                    out,
-                    schema=pa.schema(
-                        [
-                            ("bucket", pa.int32()),
-                            ("path", pa.string()),
-                            ("rows", pa.int64()),
-                            ("events", pa.int64()),
-                            ("min_seq", pa.int64()),
-                            ("max_seq", pa.int64()),
-                            ("reason", pa.string()),
-                            ("kind", pa.string()),
-                            ("stats", pa.string()),
-                        ]
-                    ),
-                )
+                    out, schema=_arrow_schema_for(_ENTRY_STRUCT))
 
-        seed = self.spark.createDataFrame(
-            [(b, magic[assign[b]]) for b in todo], "b int, pid int"
-        )
-        entries = (
-            seed.repartition(n_tasks, F.col("pid"))
-            .mapInArrow(
-                compact_task,
-                schema="bucket int, path string, rows long, events long, "
-                       "min_seq long, max_seq long, reason string, kind string, "
-                       "stats string",
-            )
-            .collect()
-        )
+        entries = self._run_bucket_tasks(
+            todo, sizes, compact_task, _ENTRY_STRUCT).collect()
         new_files, _stats = _collect_apply_entries(entries, snap.version + 1)
         props = dict(properties or {})
         props["compacted_buckets"] = len(todo)

@@ -88,20 +88,22 @@ def ensure_workers_can_import(spark: SparkSession) -> None:
     Idempotent per SparkContext; called from ``get_spark``, the changelog
     source's ``register``, and ``LakeTable`` construction so any
     foreign-session entry point passes through it."""
-    sc = spark.sparkContext
-    if getattr(sc, "_dsx_pyfiles_shipped", False):
-        return
-    sc._dsx_pyfiles_shipped = True  # one attempt per context, even on failure
-    import datax_spark
-    from pyspark import SparkFiles
-
-    pkg_dir = os.path.dirname(os.path.abspath(datax_spark.__file__))
-    if not os.path.isdir(pkg_dir):
-        # zipimport (spark-submit --py-files): whatever mechanism delivered
-        # the zip to the driver delivers it to the workers too — nothing to
-        # ship, and addFile on a zip-internal path would fail
-        return
     try:
+        # inside the guard: a Spark Connect session has no sparkContext and a
+        # namespace-package import has no __file__ — neither may break callers
+        sc = spark.sparkContext
+        if getattr(sc, "_dsx_pyfiles_shipped", False):
+            return
+        sc._dsx_pyfiles_shipped = True  # one attempt per context, even on failure
+        import datax_spark
+        from pyspark import SparkFiles
+
+        pkg_dir = os.path.dirname(os.path.abspath(datax_spark.__file__))
+        if not os.path.isdir(pkg_dir):
+            # zipimport (spark-submit --py-files): whatever mechanism delivered
+            # the zip to the driver delivers it to the workers too — nothing
+            # to ship, and addFile on a zip-internal path would fail
+            return
         sc.addFile(pkg_dir, recursive=True)
         sj = os.path.join(SparkFiles.getRootDirectory(), "streaming_job")
         os.makedirs(sj, exist_ok=True)

@@ -50,3 +50,66 @@ def test_streaming_query_from_foreign_cwd(tmp_path):
         capture_output=True, text=True, timeout=600,
     )
     assert "FOREIGN_CWD_OK" in out.stdout, out.stdout[-2000:] + out.stderr[-2000:]
+
+
+def test_ensure_workers_can_import_tolerates_missing_spark_context():
+    from datax_spark.session import ensure_workers_can_import
+
+    class ConnectLike:  # Spark Connect sessions expose no sparkContext
+        @property
+        def sparkContext(self):
+            raise RuntimeError("sparkContext is not supported in Spark Connect")
+
+    ensure_workers_can_import(ConnectLike())  # best-effort: must not raise
+
+
+def test_scoped_conf_unsets_a_key_the_session_never_set(spark):
+    sys.path.insert(0, REPO)
+    from __spark_entry__ import _scoped_conf
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    assert key not in spark.conf.getAll  # defaulted, never set
+    default = spark.conf.get(key)
+    with _scoped_conf(spark, spark__sql__execution__arrow__maxRecordsPerBatch="7"):
+        assert spark.conf.get(key) == "7"
+    assert key not in spark.conf.getAll
+    assert spark.conf.get(key) == default
+
+    explicit = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(explicit)
+    assert explicit in spark.conf.getAll
+    with _scoped_conf(spark, spark__sql__shuffle__partitions="3"):
+        assert spark.conf.get(explicit) == "3"
+    assert spark.conf.getAll.get(explicit) == before
+
+
+def test_scoped_conf_restore_ignores_effective_defaults():
+    """A conf whose ``get(key, None)`` answers with the effective default
+    (as some Spark clients do) must still leave the scope unset."""
+    sys.path.insert(0, REPO)
+    from __spark_entry__ import _scoped_conf
+
+    class Conf:
+        def __init__(self):
+            self.explicit = {}
+
+        @property
+        def getAll(self):
+            return dict(self.explicit)
+
+        def get(self, key, default=None):
+            return self.explicit.get(key, "200")
+
+        def set(self, key, value):
+            self.explicit[key] = value
+
+        def unset(self, key):
+            self.explicit.pop(key, None)
+
+    class Session:
+        conf = Conf()
+
+    s = Session()
+    with _scoped_conf(s, spark__sql__shuffle__partitions="8"):
+        assert s.conf.getAll == {"spark.sql.shuffle.partitions": "8"}
+    assert s.conf.getAll == {}
