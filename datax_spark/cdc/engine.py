@@ -3,20 +3,24 @@
 Re-expresses the reference job lifecycle (Engine → JobContainer → split →
 schedule → reader/channel/writer, SURVEY.md §3) as: one *epoch* = one
 micro-batch = read change events → validate/quarantine → schema-evolve the
-table if events carry new columns → latest-wins dedupe → copy-on-write MERGE
-into the lake table → atomically record a commit manifest.
+table if events carry new columns → latest-wins MERGE into the lake table
+through the Arrow bucket kernel → atomically record a commit manifest.
 
 Exactly-once layering (ports the change-stream reader's per-shard checkpoint
 design, otsstreamreader ShardCheckpoint.java:8-75 / RecordProcessor.java:201-235,
 onto Spark):
 - the lake table commit is ACID (snapshot publish) and carries
   ``engine_epoch`` + ``max_applied_seq`` in snapshot properties;
+- just before that commit, once the error limit has passed, the epoch's
+  manifest body (mode, per-bucket lineage, dirty reasons, hot keys) is
+  drafted to ``<ckpt>/pending.json``;
 - a commit manifest ``<ckpt>/commits/epoch-K.json`` is written AFTER the
   snapshot, keyed by (epoch, bucket-partition) with per-partition lineage
   (min/max seq + event count applied);
 - on restart: epochs with a manifest are skipped (no-op replay); an epoch whose
   snapshot landed but whose manifest write crashed is detected via the snapshot
-  property and only the manifest is re-emitted — the data is never re-applied.
+  property and its manifest is finished from the pending draft — neither the
+  data nor the epoch's quarantine (written by the same kernel job) is touched.
   (The MERGE itself is also idempotent — latest-wins re-apply of the same epoch
   yields an identical table — so correctness never depends on the fast path.)
 
@@ -39,7 +43,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from datax_spark.cdc import merge as M
-from datax_spark.cdc.schema import KEY_COLS, OP_COL, SEQ_COL
+from datax_spark.cdc.schema import OP_COL, SEQ_COL
 from datax_spark.lake.table import LakeTable
 
 
@@ -85,12 +89,6 @@ class EngineConfig:
     # skew governance (datax_spark.cdc.skew): report keys with >= this many
     # events in an epoch into the manifest; None disables the extra pass.
     hot_key_min_count: int | None = None
-    # two-phase salted MERGE fold for feeds where single keys defeat the
-    # map-side combine (hot key spread over very many input partitions).
-    merge_salts: int | None = None
-    # "colocated": shuffle only events, per-bucket Arrow merge (default);
-    # "shuffle": single-pass union-LWW Catalyst fold (see LakeTable.apply_cdc).
-    merge_strategy: str = "colocated"
     # "mor" (default): each epoch lands as per-bucket DELTA files
     # (latest-per-key upserts+deletes, Iceberg-v2-equality-delete style) and
     # buckets compact into a new base every ``compact_threshold`` layers —
@@ -140,6 +138,8 @@ class CdcEngine:
         self.cfg = cfg
         self.table = LakeTable(spark, cfg.table_root, fs=fs)
         self.commits_dir = os.path.join(cfg.checkpoint_dir, "commits")
+        # beside commits/, not in it: every file there is an epoch manifest
+        self.pending_path = os.path.join(cfg.checkpoint_dir, "pending.json")
         self.quarantine_dir = os.path.join(cfg.checkpoint_dir, "quarantine")
         os.makedirs(self.commits_dir, exist_ok=True)
         # Stable identity for THIS checkpoint's epoch counter. The snapshot
@@ -307,28 +307,53 @@ class CdcEngine:
     # ------------------------------------------------------------------- apply
 
     def apply_epoch(self, epoch: int) -> dict:
-        manifest_path = os.path.join(self.commits_dir, f"epoch-{epoch}.json")
-        if os.path.exists(manifest_path):
-            with open(manifest_path) as f:
-                return json.load(f)  # exactly-once: replay is a no-op
-        if self._feed_aligned() and self.cfg.merge_strategy == "colocated":
-            snap = self.table.snapshot()
-            if self._applied_epoch(snap) < epoch:
-                return self._apply_epoch_aligned(epoch, manifest_path)
+        done = self._committed_manifest(epoch)
+        if done is not None:
+            return done
+        if self._feed_aligned():
+            return self._apply_epoch_aligned(epoch)
         return self.apply_batch(self.read_epoch(epoch), epoch)
+
+    def _manifest_path(self, epoch: int) -> str:
+        return os.path.join(self.commits_dir, f"epoch-{epoch}.json")
+
+    def _committed_manifest(self, epoch: int) -> dict | None:
+        """Epoch ``epoch``'s commit manifest if the epoch is already applied,
+        else None.
+
+        Normally that is ``epoch-K.json`` (exactly-once: replay is a no-op).
+        When the snapshot landed but the manifest write crashed, the
+        manifest is finished from the draft ``pre_commit`` wrote just before
+        that snapshot commit — no feed re-read, no stats job, and the
+        epoch's quarantine (written by the same kernel job) is left as is."""
+        path = self._manifest_path(epoch)
+        if os.path.exists(path):
+            with open(path) as f:
+                return json.load(f)
+        snap = self.table.snapshot()
+        if self._applied_epoch(snap) < epoch:
+            return None
+        t0 = time.time()
+        with open(self.pending_path) as f:
+            draft = json.load(f)
+        if draft.get("epoch") != epoch:
+            raise RuntimeError(
+                f"epoch {epoch}: snapshot v{snap.version} holds it but its "
+                f"pending manifest belongs to epoch {draft.get('epoch')}"
+            )
+        return self._emit_epoch_manifest(draft, snap.version, time.time() - t0)
 
     def _reset_quarantine(self, epoch: int) -> None:
         """Drop epoch-``epoch``'s quarantine dir before (re-)applying it.
 
         Quarantine content is a deterministic function of the epoch's
-        events, but both apply paths WRITE it append-style (task-side
-        ``q-*.parquet`` files in the fused merge, ``mode("append")`` in the
-        two-pass path). A driver crash between the quarantine write and the
-        checkpoint-manifest write therefore leaves rows a re-apply (or the
-        crashed-manifest rebuild) would duplicate — the exactly-once sweep
-        in tests/test_crash_sweep.py hits this at every such point. Only an
-        epoch WITHOUT a committed manifest can reach here, so the existing
-        dir always belongs to a crashed attempt of this same epoch."""
+        events, but the kernel WRITES it append-style (task-side
+        ``q-*.parquet`` files). A driver crash between the quarantine write
+        and the snapshot commit therefore leaves rows a re-apply would
+        duplicate — the exactly-once sweep in tests/test_crash_sweep.py hits
+        this at every such point. Only an epoch whose snapshot has NOT
+        landed reaches here, so the existing dir always belongs to a crashed
+        attempt of this same epoch."""
         qdir = os.path.join(self.quarantine_dir, f"epoch={epoch}")
         if os.path.isdir(qdir):
             shutil.rmtree(qdir)
@@ -392,7 +417,7 @@ class CdcEngine:
                 out.setdefault(key, []).extend(files)
         return out
 
-    def _apply_epoch_aligned(self, epoch: int, manifest_path: str) -> dict:
+    def _apply_epoch_aligned(self, epoch: int) -> dict:
         """Zero-shuffle apply: per-bucket tasks read their feed shard files
         directly (LakeTable.apply_cdc_files); validation/quarantine runs in
         Arrow inside the same tasks. One stage, no exchange."""
@@ -417,18 +442,6 @@ class CdcEngine:
                 min_count=self.cfg.hot_key_min_count,
             )
 
-        def pre_commit(stats: dict) -> dict:
-            self._check_error_limit(
-                stats["dirty_total"],
-                stats["dirty_total"] + stats["events_total"],
-                epoch,
-            )
-            return {
-                "engine_epoch": epoch,
-                "engine_ckpt_id": self.engine_id,
-                "max_applied_seq": stats["max_applied_seq"],
-            }
-
         new_snap, stats = self.table.apply_cdc_files(
             shard_files,
             key_cols=list(self.cfg.key_cols),
@@ -436,134 +449,29 @@ class CdcEngine:
             seq_col=self.cfg.seq_col,
             arrow_validator=M.make_arrow_validator(self.cfg.op_col),
             quarantine_dir=os.path.join(self.quarantine_dir, f"epoch={epoch}"),
-            pre_commit=pre_commit,
+            pre_commit=self._pre_commit(epoch, "aligned", hot_keys),
             write_mode=self.cfg.write_mode,
             compact_threshold=self.cfg.compact_threshold,
         )
-        manifest = self._emit_epoch_manifest(
-            epoch, new_snap, stats, time.time() - t0, manifest_path, hot_keys,
-            mode="aligned",
+        return self._emit_epoch_manifest(
+            self._draft(epoch, "aligned", stats, hot_keys), new_snap.version,
+            time.time() - t0,
         )
-        return manifest
 
     def apply_batch(self, batch: DataFrame, epoch: int) -> dict:
         """Apply one micro-batch (used by both the epoch loop and the
         Structured Streaming foreachBatch sink — ``epoch`` is the streaming
         batch id there). Idempotent per epoch id.
 
-        Colocated strategy runs the FUSED single-pass path: merge + lineage +
-        quarantine + error accounting in one job (one scan of the epoch). The
-        shuffle strategy and the crashed-manifest rebuild keep the two-pass
-        path (stats job, then apply)."""
-        manifest_path = os.path.join(self.commits_dir, f"epoch-{epoch}.json")
-        if os.path.exists(manifest_path):
-            with open(manifest_path) as f:
-                return json.load(f)
+        Runs the FUSED single-pass route: merge + lineage + quarantine +
+        error accounting in one kernel job (one scan of the epoch)."""
+        done = self._committed_manifest(epoch)
+        if done is not None:
+            return done
 
         self._reset_quarantine(epoch)
-        snap = self.table.snapshot()
-        already = self._applied_epoch(snap)
         t0 = time.time()
         self._evolve_schema(batch)
-        snap = self.table.snapshot()
-
-        if self.cfg.merge_strategy == "colocated" and already < epoch:
-            return self._apply_batch_fused(batch, epoch, manifest_path, t0)
-
-        valid, dirty = M.split_valid_dirty(batch)
-
-        # ONE aggregation pass over the epoch batch yields dirty counts AND
-        # per-bucket lineage (min/max seq + events applied) — no caching needed;
-        # the later apply re-scans the (column-pruned, cheap) parquet epoch.
-        bucket = self.table._bucket_expr(snap)
-        stats_rows = (
-            batch.withColumn("_dirty_reason", M.dirty_reason_expr())
-            .withColumn("_b", F.when(F.col("_dirty_reason").isNull(), bucket))
-            .groupBy("_dirty_reason", "_b")
-            .agg(
-                F.min(self.cfg.seq_col).alias("min_seq"),
-                F.max(self.cfg.seq_col).alias("max_seq"),
-                F.count("*").alias("events"),
-            )
-            .collect()
-        )
-        lineage: dict[str, dict] = {}
-        dirty_rows = 0
-        for r in stats_rows:
-            if r["_dirty_reason"] is not None:
-                dirty_rows += int(r["events"])
-            else:
-                lineage[str(r["_b"])] = {
-                    "min_seq": r["min_seq"],
-                    "max_seq": r["max_seq"],
-                    "events": int(r["events"]),
-                }
-        if dirty_rows:
-            dirty.write.mode("append").parquet(os.path.join(self.quarantine_dir, f"epoch={epoch}"))
-
-        n_valid = sum(v["events"] for v in lineage.values())
-        total = n_valid + dirty_rows
-        self._check_error_limit(dirty_rows, total, epoch)
-
-        max_seq = max((v["max_seq"] for v in lineage.values()), default=None)
-
-        hot_keys: list[dict] = []
-        if self.cfg.hot_key_min_count is not None:
-            from datax_spark.cdc import skew
-
-            hot_keys = skew.detect_hot_keys(
-                valid, key_cols=[self.cfg.key_cols[0]], min_count=self.cfg.hot_key_min_count
-            )
-
-        if already >= epoch:
-            # snapshot landed previously but manifest write crashed: emit manifest only
-            new_version = snap.version
-        else:
-            new_snap = self.table.apply_cdc(
-                valid,
-                key_cols=list(self.cfg.key_cols),
-                op_col=self.cfg.op_col,
-                seq_col=self.cfg.seq_col,
-                affected_buckets=[int(b) for b in lineage],
-                properties={
-                    "engine_epoch": epoch,
-                    "engine_ckpt_id": self.engine_id,
-                    "max_applied_seq": max_seq,
-                },
-                n_salts=self.cfg.merge_salts,
-                strategy=self.cfg.merge_strategy,
-            )
-            new_version = new_snap.version
-
-        dt = time.time() - t0
-        manifest = {
-            "epoch": epoch,
-            "snapshot_version": new_version,
-            "events": n_valid,
-            "dirty": dirty_rows,
-            "max_applied_seq": max_seq,
-            "partitions": lineage,
-            "duration_s": round(dt, 3),
-            "events_per_sec": round(n_valid / dt, 1) if dt > 0 else None,
-        }
-        if hot_keys:
-            manifest["hot_keys"] = hot_keys
-        _atomic_write_json(manifest_path, manifest)
-        self._emit(
-            {
-                "kind": "epoch_commit",
-                "epoch": epoch,
-                "events": n_valid,
-                "dirty": dirty_rows,
-                "events_per_sec": manifest["events_per_sec"],
-                "duration_s": manifest["duration_s"],
-                "max_applied_seq": max_seq,
-            }
-        )
-        return manifest
-
-    def _apply_batch_fused(self, batch: DataFrame, epoch: int,
-                           manifest_path: str, t0: float) -> dict:
         tagged = batch.withColumn("_dsx_dirty_reason", M.dirty_reason_expr())
 
         hot_keys: list[dict] = []
@@ -576,19 +484,6 @@ class CdcEngine:
                 min_count=self.cfg.hot_key_min_count,
             )
 
-        def pre_commit(stats: dict) -> dict:
-            # abort BEFORE the snapshot commit: table is never half-applied
-            self._check_error_limit(
-                stats["dirty_total"],
-                stats["dirty_total"] + stats["events_total"],
-                epoch,
-            )
-            return {
-                "engine_epoch": epoch,
-                "engine_ckpt_id": self.engine_id,
-                "max_applied_seq": stats["max_applied_seq"],
-            }
-
         new_snap, stats = self.table.apply_cdc_stats(
             tagged,
             key_cols=list(self.cfg.key_cols),
@@ -596,46 +491,77 @@ class CdcEngine:
             seq_col=self.cfg.seq_col,
             dirty_reason_col="_dsx_dirty_reason",
             quarantine_dir=os.path.join(self.quarantine_dir, f"epoch={epoch}"),
-            pre_commit=pre_commit,
+            pre_commit=self._pre_commit(epoch, "fused", hot_keys),
             write_mode=self.cfg.write_mode,
             compact_threshold=self.cfg.compact_threshold,
         )
-
         return self._emit_epoch_manifest(
-            epoch, new_snap, stats, time.time() - t0, manifest_path, hot_keys,
-            mode="fused",
+            self._draft(epoch, "fused", stats, hot_keys), new_snap.version,
+            time.time() - t0,
         )
 
-    def _emit_epoch_manifest(self, epoch, new_snap, stats, dt, manifest_path,
-                             hot_keys, mode: str) -> dict:
-        n_valid = stats["events_total"]
-        manifest = {
+    @staticmethod
+    def _draft(epoch: int, mode: str, stats: dict, hot_keys: list[dict]) -> dict:
+        """The epoch manifest minus what only the commit knows (snapshot
+        version) and timing."""
+        draft = {
             "epoch": epoch,
             "mode": mode,
-            "snapshot_version": new_snap.version,
-            "events": n_valid,
+            "events": stats["events_total"],
             "dirty": stats["dirty_total"],
             "dirty_reasons": stats["dirty"],
             "max_applied_seq": stats["max_applied_seq"],
             "partitions": stats["lineage"],
+        }
+        if hot_keys:
+            draft["hot_keys"] = hot_keys
+        return draft
+
+    def _pre_commit(self, epoch: int, mode: str, hot_keys: list[dict]):
+        """The kernel's ``pre_commit`` hook: runs after the kernel job and
+        BEFORE the snapshot commit. Aborts on the error limit (the table is
+        never half-applied), then drafts the manifest to ``pending.json`` so
+        a crash after the commit can finish the manifest without re-reading
+        the epoch; returns the snapshot properties that mark it applied."""
+
+        def pre_commit(stats: dict) -> dict:
+            self._check_error_limit(
+                stats["dirty_total"],
+                stats["dirty_total"] + stats["events_total"],
+                epoch,
+            )
+            _atomic_write_json(self.pending_path,
+                               self._draft(epoch, mode, stats, hot_keys))
+            return {
+                "engine_epoch": epoch,
+                "engine_ckpt_id": self.engine_id,
+                "max_applied_seq": stats["max_applied_seq"],
+            }
+
+        return pre_commit
+
+    def _emit_epoch_manifest(self, draft: dict, snapshot_version: int,
+                             dt: float) -> dict:
+        epoch, n_valid = draft["epoch"], draft["events"]
+        manifest = {
+            **draft,
+            "snapshot_version": snapshot_version,
             "duration_s": round(dt, 3),
             "events_per_sec": round(n_valid / dt, 1) if dt > 0 else None,
         }
-        if hot_keys:
-            manifest["hot_keys"] = hot_keys
-        _atomic_write_json(manifest_path, manifest)
+        _atomic_write_json(self._manifest_path(epoch), manifest)
         if self.cfg.vacuum_keep_last is not None:
             self.table.vacuum(keep_last=self.cfg.vacuum_keep_last)
         self._emit(
             {
                 "kind": "epoch_commit",
                 "epoch": epoch,
-                "mode": mode,
+                "mode": draft["mode"],
                 "events": n_valid,
-                "dirty": stats["dirty_total"],
+                "dirty": draft["dirty"],
                 "events_per_sec": manifest["events_per_sec"],
                 "duration_s": manifest["duration_s"],
-                "max_applied_seq": stats["max_applied_seq"],
+                "max_applied_seq": draft["max_applied_seq"],
             }
         )
         return manifest

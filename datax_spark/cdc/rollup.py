@@ -34,7 +34,7 @@ Scale shape (the plan at 10^10 base rows):
     version (bucket-pruned merged read).
   - the signed aggregation is a map-side-combined hash agg over O(changes).
   - the rollup read is pruned to the affected groups' buckets; the MERGE
-    (``apply_cdc``, colocated) rewrites only those buckets.
+    (``apply_cdc``) rewrites only those buckets.
   Nothing in the refresh touches unaffected base or rollup data.
 
 Reference contract: this generalizes the reference's "sync job recomputes the

@@ -1,31 +1,20 @@
-"""Explicit hot-key (skew) handling: detection, salted dedupe, salted writes.
+"""Explicit hot-key (skew) diagnostics.
 
 The reference handles source-side skew by quantile-sampled range splits
 (SingleTableSplitUtil.genSplitSqlForOracle:317-412) and otherwise relies on
 the channel's pull model to balance. Our skew point is different: at
 10^10-change-event scale a handful of conversations receive 10^3-10^4x the
-median event count (Zipf fan-out, FIXTURES.md §2), and every shuffle keyed by
-``conv_id`` concentrates those keys on single reducers.
+median event count (Zipf fan-out, FIXTURES.md §2). The MERGE runs as one
+Arrow task per storage bucket, so a hot ``conv_id`` is a hot bucket task;
+key salting in Catalyst cannot split it (every event of a key must meet the
+key's bucket files), and the bucket kernel's LPT placement
+(lake.table._assign_buckets_lpt) is what keeps a hot bucket from sharing a
+task with other large ones.
 
-Three explicit counter-measures (beyond AQE skew-join splitting, which is on
-by default in datax_spark.session.get_spark):
-
-1. ``detect_hot_keys`` — one aggregation pass (map-side combined, so the scan
-   cost is O(input) with tiny shuffle) that returns keys whose event count
-   exceeds a threshold; the engine logs them into the epoch manifest so
-   lineage shows *where* the skew was.
-2. ``salted_dedupe_latest`` — two-phase latest-wins fold: phase 1 groups by
-   (key, salt) so a hot key's events are collapsed on ``n_salts`` parallel
-   reducers; phase 2 folds the ≤ n_salts survivors per key. Result is
-   row-identical to ``merge.dedupe_latest``; use it when a single key's
-   in-flight event count exceeds what one reducer should hold. (Plain
-   ``dedupe_latest`` already gets hash-aggregate map-side partial combine —
-   salting additionally bounds the *reduce*-side per-key row count when the
-   map-side combine is defeated, e.g. a hot key spread over thousands of input
-   partitions.)
-3. ``repartition_salted`` — explicit salted repartition for downstream
-   per-partition work (e.g. bucket file writes) so one hot bucket does not
-   serialize into one task.
+``detect_hot_keys`` is one aggregation pass (map-side combined, so the scan
+cost is O(input) with tiny shuffle) that returns keys whose event count
+exceeds a threshold; the engine logs them into the epoch manifest so lineage
+shows *where* the skew was (EngineConfig.hot_key_min_count).
 """
 
 from __future__ import annotations
@@ -33,9 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from datax_spark.cdc.schema import KEY_COLS, SEQ_COL
-
-_SALT = "_dsx_salt"
+from datax_spark.cdc.schema import KEY_COLS
 
 
 def detect_hot_keys(
@@ -58,53 +45,3 @@ def detect_hot_keys(
         .collect()
     )
     return [r.asDict() for r in rows]
-
-
-def salted_dedupe_latest(
-    batch: DataFrame,
-    key_cols: list[str] | None = None,
-    seq_col: str = SEQ_COL,
-    n_salts: int = 16,
-) -> DataFrame:
-    """Two-phase latest-wins dedupe, row-identical to merge.dedupe_latest.
-
-    Salt is derived from ``seq`` (uniform over a key's events, deterministic),
-    so phase 1 spreads each hot key over ``n_salts`` reducers and phase 2 sees
-    at most ``n_salts`` rows per key.
-    """
-    key_cols = key_cols or KEY_COLS
-    payload = [c for c in batch.columns if c not in key_cols]
-    ordered = [seq_col] + [c for c in payload if c != seq_col]
-    salted = batch.withColumn(_SALT, F.pmod(F.xxhash64(F.col(seq_col)), F.lit(n_salts)))
-    phase1 = (
-        salted.groupBy(*key_cols, _SALT)
-        .agg(F.max(F.struct(*ordered)).alias("_w"))
-        .drop(_SALT)
-    )
-    phase2 = phase1.groupBy(*key_cols).agg(F.max("_w").alias("_w"))
-    return phase2.select(*key_cols, *[F.col(f"_w.{c}").alias(c) for c in ordered])
-
-
-def repartition_salted(
-    df: DataFrame,
-    key_col: str,
-    n_partitions: int,
-    n_salts: int = 8,
-    salt_source: str | None = None,
-) -> DataFrame:
-    """Repartition by (key, salt) so a hot key spans ``n_salts`` tasks.
-
-    ``salt_source``: a high-cardinality column to derive the salt from
-    (deterministic); defaults to a per-row monotonic id (non-deterministic
-    placement, deterministic data).
-    """
-    salt = (
-        F.pmod(F.xxhash64(F.col(salt_source)), F.lit(n_salts))
-        if salt_source
-        else F.pmod(F.monotonically_increasing_id(), F.lit(n_salts))
-    )
-    return (
-        df.withColumn(_SALT, salt)
-        .repartition(n_partitions, F.col(key_col), F.col(_SALT))
-        .drop(_SALT)
-    )

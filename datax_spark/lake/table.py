@@ -2302,215 +2302,67 @@ class LakeTable:
         op_col: str = "op",
         seq_col: str | None = "seq",
         delete_op: str = "D",
-        affected_buckets: list[int] | None = None,
         properties: dict | None = None,
-        n_salts: int | None = None,
-        strategy: str = "colocated",
     ) -> Snapshot:
-        """Keyed CDC apply: MERGE semantics with a choice of physical strategy.
+        """Keyed CDC apply (MERGE semantics): a copy-on-write
+        :meth:`apply_cdc_stats` that returns just the snapshot.
 
-        ``strategy="colocated"`` (default): shuffle ONLY the change events,
-        partitioned by storage bucket; each Arrow task reads its buckets'
-        existing data files directly (no shuffle of the table), merges
-        last-writer-wins locally, and writes the replacement files. Per epoch
-        the shuffle volume is O(delta), not O(table) — at 10^10 rows this is
-        the difference between moving gigabytes and moving the lake. This is
-        the storage-partitioned-join pattern (Iceberg SPJ) applied to MERGE.
+        ``source`` is a raw change batch (may hold many events per key):
+        per key the newest event (by ``seq_col``; None = one event per key)
+        wins, rows whose winning op is ``delete_op`` are dropped, and
+        partial_update/aggregate tables fold columns by their merge mode.
+        Only the change events cross the shuffle, steered by storage bucket;
+        each Arrow bucket task reads its bucket's existing files directly,
+        merges and writes the replacement — the storage-partitioned-join
+        pattern (Iceberg SPJ) applied to MERGE, O(delta) shuffle per call.
+        Buckets without events keep their files unchanged.
+        """
+        return self.apply_cdc_stats(
+            source, key_cols, op_col, seq_col, delete_op, properties=properties,
+        )[0]
 
-        ``strategy="shuffle"``: single-pass union-LWW fold (below) — keeps
-        the whole plan in Catalyst; the fallback when the target is not
-        bucket-aligned.
+    def apply_cdc_stats(
+        self,
+        source: DataFrame,
+        key_cols: list[str],
+        op_col: str = "op",
+        seq_col: str | None = "seq",
+        delete_op: str = "D",
+        dirty_reason_col: str | None = None,
+        quarantine_dir: str | None = None,
+        properties: dict | None = None,
+        pre_commit=None,
+        write_mode: str = "cow",
+        compact_threshold: int = 8,
+    ) -> tuple[Snapshot, dict]:
+        """Single-pass CDC apply: merge, per-bucket lineage, and dirty-event
+        quarantine in ONE job over the source — the epoch feed is scanned
+        once, and only the change events cross the shuffle.
 
-        ``source`` is a raw change batch (may hold many events per key). The
-        whole MERGE — dedupe-latest per key, update/insert, delete — is a
-        single last-writer-wins fold over ``target ∪ source``: existing table
-        rows enter with seq = -1, events with their real seq, and
-        ``groupBy(key).agg(max(struct(seq, op, payload)))`` keeps the newest
-        version of every key; rows whose winning op is a delete are dropped.
+        Events are repartitioned by bucket id; each Arrow task buffers its
+        buckets' events, reads those buckets' existing parquet files from
+        storage, runs the shared bucket kernel (:func:`_make_bucket_processor`)
+        and writes a delta layer or a replacement base, reporting DataFile
+        and lineage entries (events applied, min/max seq).
 
-        Scale notes:
-        - equivalent to ``MERGE INTO`` (WHEN MATCHED UPDATE / DELETE, WHEN NOT
-          MATCHED INSERT) but costs ONE shuffle for the fold (hash aggregate
-          with map-side partial combine — a hot key with 10^4 events in the
-          batch is pre-collapsed on every input partition) plus one bucket
-          repartition for the write, instead of anti-join + dedupe + write
-          shuffles.
-        - copy-on-write at bucket granularity: only buckets present in the
-          source are scanned (manifest file pruning) and rewritten; untouched
-          buckets carry their files into the new snapshot unchanged.
-        - ``affected_buckets`` can be passed in when the caller already
-          computed them (the engine gets them free from its lineage pass).
+        ``source`` may carry malformed events tagged in ``dirty_reason_col``
+        (NULL = valid); they are steered to a quarantine pseudo-bucket, written
+        under ``quarantine_dir`` with a ``_dirty_reason`` column, counted per
+        reason, and never merged. ``pre_commit(stats)`` runs after the job but
+        BEFORE the snapshot commit — raise there to abort with no table
+        mutation (error-limit breaker), or return a dict of extra snapshot
+        properties (e.g. max_applied_seq). Returns (snapshot, stats).
         """
         snap = self.snapshot()
-        payload_cols = [f.name for f in snap.schema.fields]
-        src = source.withColumn(_BUCKET_COL, self._bucket_expr(snap))
+        bucket = self._bucket_expr(snap)
+        if dirty_reason_col is not None:
+            bucket = F.when(F.col(dirty_reason_col).isNull(), bucket).otherwise(F.lit(-1))
+        src = source.withColumn(
+            _BUCKET_COL, F.coalesce(bucket, F.lit(-1)).cast("int")
+        )
         if seq_col is None:
             seq_col = "_dsx_seq"
             src = src.withColumn(seq_col, F.lit(0).cast("long"))
-        # identifier-field metadata (parity with _finish_apply): read_changes'
-        # state diff and drop_columns' key guard need the merge keys recorded
-        properties = dict(properties or {})
-        properties.setdefault("merge_keys", ",".join(key_cols))
-        properties.setdefault("merge_op_col", op_col)
-        properties.setdefault("merge_delete_op", delete_op)
-        properties.setdefault("merge_seq_col", seq_col)
-        if affected_buckets is None:
-            affected_buckets = [r[0] for r in src.select(_BUCKET_COL).distinct().collect()]
-        affected = sorted(int(b) for b in affected_buckets)
-        if not affected:
-            return self._rebase_commit(snap, {}, properties, operation="apply_cdc",
-                                       commutative=True)
-
-        if strategy == "colocated":
-            new_files, _stats = self._merge_colocated(
-                src, snap, key_cols, op_col, seq_col, delete_op, affected
-            )
-            return self._rebase_commit(
-                snap,
-                {str(b): ("replace", new_files.get(str(b), [])) for b in affected},
-                properties,
-                operation="apply_cdc",
-            )
-
-        target = (
-            self.read(buckets=affected)
-            .withColumn(_BUCKET_COL, self._bucket_expr(snap))
-            .withColumn(seq_col, F.lit(-1).cast("long"))
-            .withColumn(op_col, F.lit("U"))
-        )
-        self._check_source_types(src, snap)
-        src_types = {f.name: f.dataType for f in src.schema.fields}
-        src_aligned = src.select(
-            *[
-                _aligned_src_col(c, f, src_types)
-                for c, f in ((f.name, f) for f in snap.schema.fields)
-            ],
-            F.col(seq_col).cast("long").alias(seq_col),
-            F.col(op_col),
-            F.col(_BUCKET_COL),
-        )
-        unioned = target.unionByName(src_aligned)
-        non_key = [seq_col, op_col, _BUCKET_COL] + [c for c in payload_cols if c not in key_cols]
-        if _merge_mode_of(snap) in ("partial_update", "aggregate"):
-            # Catalyst partial/aggregate fold (the non-bucket-aligned
-            # fallback). Existing rows enter at seq=-1 as the oldest layer; a
-            # key's columns each resolve independently over rows newer than
-            # the newest delete/replace cut — last-non-null for patches, the
-            # column's own aggregator for aggregate tables.
-            if n_salts:
-                raise NotImplementedError(
-                    "hot-key salting is not implemented for partial_update/"
-                    "aggregate tables; use strategy='colocated' (the default)"
-                )
-            replace_op = _replace_op_of(snap)
-            spec = _agg_spec_of(snap) or {}
-            from pyspark.sql import Window
-
-            w = Window.partitionBy(*key_cols)
-            cut = F.max(
-                F.when(F.col(op_col).isin(delete_op, replace_op),
-                       F.col(seq_col))
-            ).over(w)
-            # a replace row contributes its own values; a delete does not
-            elig = (F.col(op_col) != F.lit(delete_op)) & (
-                cut.isNull() | (F.col(seq_col) >= cut)
-            )
-            flat = unioned.withColumn("_dsx_elig", elig).filter("_dsx_elig")
-
-            def pick(c):
-                fn = spec.get(c, "last_non_null")
-                if fn == "sum":
-                    # sum widens (int->long, float->double); cast back to the
-                    # declared column type like the Arrow kernel does
-                    return F.sum(c).cast(
-                        snap.schema[c].dataType.simpleString()).alias(c)
-                if fn == "max":
-                    return F.max(c).alias(c)
-                if fn == "min":
-                    return F.min(c).alias(c)
-                if fn == "last":  # newest version, null assignments kept
-                    return F.max(
-                        F.struct(F.col(seq_col).alias("s"),
-                                 F.col(c).alias("v"))
-                    ).getField("v").alias(c)
-                pref = F.min if fn == "first_non_null" else F.max
-                return pref(
-                    F.when(F.col(c).isNotNull(),
-                           F.struct(F.col(seq_col).alias("s"),
-                                    F.col(c).alias("v")))
-                ).getField("v").alias(c)
-
-            latest = flat.groupBy(*key_cols).agg(
-                *[pick(c) for c in payload_cols if c not in key_cols],
-                F.max(_BUCKET_COL).alias(_BUCKET_COL),
-            )
-            merged = latest.select(*payload_cols, _BUCKET_COL)
-            new_files = self._write_data_files(merged, snap)
-            return self._rebase_commit(
-                snap,
-                {str(b): ("replace", new_files.get(str(b), []))
-                 for b in affected},
-                properties,
-                operation="apply_cdc",
-            )
-        if n_salts:
-            # Explicit hot-key salting (datax_spark.cdc.skew): phase 1 folds each
-            # key's events on n_salts reducers, phase 2 sees <= n_salts rows/key.
-            salt = F.pmod(F.xxhash64(F.col(seq_col)), F.lit(n_salts))
-            phase1 = (
-                unioned.withColumn("_dsx_salt", salt)
-                .groupBy(*key_cols, "_dsx_salt")
-                .agg(F.max(F.struct(*non_key)).alias("_w"))
-            )
-            latest = (
-                phase1.groupBy(*key_cols)
-                .agg(F.max("_w").alias("_w"))
-                .select(*key_cols, *[F.col(f"_w.{c}").alias(c) for c in non_key])
-            )
-        else:
-            latest = (
-                unioned.groupBy(*key_cols)
-                .agg(F.max(F.struct(*non_key)).alias("_w"))
-                .select(*key_cols, *[F.col(f"_w.{c}").alias(c) for c in non_key])
-            )
-        merged = latest.filter(F.col(op_col) != F.lit(delete_op)).select(*payload_cols, _BUCKET_COL)
-        new_files = self._write_data_files(merged, snap)
-        return self._rebase_commit(
-            snap,
-            {str(b): ("replace", new_files.get(str(b), [])) for b in affected},
-            properties,
-            operation="apply_cdc",
-        )
-
-    def _merge_colocated(
-        self,
-        src: DataFrame,
-        snap: Snapshot,
-        key_cols: list[str],
-        op_col: str,
-        seq_col: str,
-        delete_op: str,
-        affected: list[int],
-        dirty_reason_col: str | None = None,
-        quarantine_dir: str | None = None,
-        write_mode: str = "cow",
-        compact_threshold: int = 8,
-    ) -> tuple[dict[str, list[dict]], dict]:
-        """Per-bucket LWW merge in Arrow tasks; only events cross the shuffle.
-
-        Events are repartitioned by bucket id; each task buffers its buckets'
-        events, reads those buckets' existing parquet files from storage
-        (manifest-pruned — untouched buckets are never opened), merges
-        old ∪ events with a sort + last-per-key pass, drops delete winners,
-        and writes replacement files, returning DataFile entries.
-
-        The SAME tasks also compute per-bucket lineage (events applied,
-        min/max seq) and — when ``dirty_reason_col`` is set — quarantine
-        malformed events (steered to pseudo-bucket -1) and count them per
-        reason, so one job yields merge + manifest + error accounting: the
-        epoch feed is scanned once, not once per concern.
-        """
-        table_root = self.root
         staging_rel = os.path.join(_DATA, f"stage-{uuid.uuid4().hex}")
         staging = os.path.join(self.root, staging_rel)
         self.fs.makedirs(staging)
@@ -2518,20 +2370,17 @@ class LakeTable:
             self.fs.makedirs(quarantine_dir)
 
         payload_cols = [f.name for f in snap.schema.fields]
-        # load manifests for the affected buckets ONLY (manifest-list prune)
+        # steer every table bucket: which are touched is only known post-job
+        buckets = list(range(snap.n_buckets))
         bucket_files = {
-            int(b): [
-                (
-                    os.path.join(table_root, f["path"]),
-                    f.get("kind", "base"),
-                    f.get("gen", 0),
-                )
+            b: [
+                (os.path.join(self.root, f["path"]), f.get("kind", "base"),
+                 f.get("gen", 0))
                 for f in snap.files[str(b)]
             ]
-            for b in affected
+            for b in buckets
             if str(b) in snap.files
         }
-        next_gen = snap.version + 1
         extra_cols = [F.col(dirty_reason_col)] if dirty_reason_col else []
         self._check_source_types(src, snap)
         src_types = {f.name: f.dataType for f in src.schema.fields}
@@ -2550,16 +2399,13 @@ class LakeTable:
         # rows (to read+rewrite) — LPT keeps the hottest bucket from sharing a
         # task with other big ones.
         sizes = {
-            b: sum(f["rows"] for f in snap.files.get(str(b), ())) + 1 for b in affected
+            b: sum(f["rows"] for f in snap.files.get(str(b), ())) + 1 for b in buckets
         }
-        steered = list(affected)
+        steered = list(buckets)
         if dirty_reason_col:
             steered.append(-1)
             sizes[-1] = 1
-        n_tasks = int(
-            os.environ.get("DSX_MERGE_TASKS", 0)  # tuning override for benchmarks
-        ) or min(len(steered), max(self.spark.sparkContext.defaultParallelism, 1))
-        n_tasks = min(n_tasks, len(steered))
+        n_tasks = min(len(steered), max(self.spark.sparkContext.defaultParallelism, 1))
         process_bucket = _make_bucket_processor(
             payload_cols, key_cols, seq_col, op_col, delete_op,
             write_mode, compact_threshold, staging, staging_rel,
@@ -2570,7 +2416,7 @@ class LakeTable:
         # steering map literal) is identical across epochs — the projected
         # expression's codegen and plan fragments get cache hits instead of a
         # recompile per epoch. Size-aware LPT only when real skew exists.
-        vals = [sizes[b] for b in affected] or [1]
+        vals = [sizes[b] for b in buckets] or [1]
         balanced = max(vals) <= 2 * (sum(vals) / len(vals))
         assign = _assign_buckets_lpt(steered, None if balanced else sizes, n_tasks)
         magic = _partition_magic(n_tasks)
@@ -2649,51 +2495,7 @@ class LakeTable:
             .mapInArrow(merge_partition, schema=_ENTRY_STRUCT)
             .collect()
         )
-        return _collect_apply_entries(entries, next_gen)
-
-    def apply_cdc_stats(
-        self,
-        source: DataFrame,
-        key_cols: list[str],
-        op_col: str = "op",
-        seq_col: str | None = "seq",
-        delete_op: str = "D",
-        dirty_reason_col: str | None = None,
-        quarantine_dir: str | None = None,
-        properties: dict | None = None,
-        pre_commit=None,
-        write_mode: str = "cow",
-        compact_threshold: int = 8,
-    ) -> tuple[Snapshot, dict]:
-        """Single-pass CDC apply (colocated): merge, per-bucket lineage, and
-        dirty-event quarantine in ONE job over the source — the epoch feed is
-        scanned once instead of once for stats and once for the merge.
-
-        ``source`` may carry malformed events tagged in ``dirty_reason_col``
-        (NULL = valid); they are steered to a quarantine pseudo-bucket, written
-        under ``quarantine_dir`` with a ``_dirty_reason`` column, counted per
-        reason, and never merged. ``pre_commit(stats)`` runs after the job but
-        BEFORE the snapshot commit — raise there to abort with no table
-        mutation (error-limit breaker), or return a dict of extra snapshot
-        properties (e.g. max_applied_seq). Returns (snapshot, stats).
-        """
-        snap = self.snapshot()
-        bucket = self._bucket_expr(snap)
-        if dirty_reason_col is not None:
-            bucket = F.when(F.col(dirty_reason_col).isNull(), bucket).otherwise(F.lit(-1))
-        src = source.withColumn(
-            _BUCKET_COL, F.coalesce(bucket, F.lit(-1)).cast("int")
-        )
-        if seq_col is None:
-            seq_col = "_dsx_seq"
-            src = src.withColumn(seq_col, F.lit(0).cast("long"))
-        # steer every table bucket: which are touched is only known post-job
-        all_buckets = list(range(snap.n_buckets))
-        new_files, stats = self._merge_colocated(
-            src, snap, key_cols, op_col, seq_col, delete_op, all_buckets,
-            dirty_reason_col=dirty_reason_col, quarantine_dir=quarantine_dir,
-            write_mode=write_mode, compact_threshold=compact_threshold,
-        )
+        new_files, stats = _collect_apply_entries(entries, snap.version + 1)
         return self._finish_apply(
             snap, new_files, stats, properties, pre_commit, key_cols, op_col,
             delete_op, seq_col=seq_col,
@@ -2979,8 +2781,9 @@ class LakeTable:
     ) -> Snapshot:
         """Classic MERGE API: ``source`` holds ONE row per key with an op column
 
-        (the pre-deduped form — datax_spark.cdc.merge.dedupe_latest). Runs on
-        the same single-pass union-LWW plan as ``apply_cdc``.
+        (the pre-deduped form — datax_spark.cdc.merge.dedupe_latest). Runs
+        through ``apply_cdc``, i.e. the same Arrow bucket kernel as every
+        other keyed apply.
         """
         seq = "seq" if "seq" in source.columns else None
         return self.apply_cdc(
@@ -3002,8 +2805,8 @@ class LakeTable:
         sized for 10^8 rows overflow task memory at 10^10 — rebucketing 64→4096
         keeps the per-bucket merge's Arrow working set bounded while the
         aligned zero-shuffle apply keeps working (the CDC engine re-checks
-        shard/bucket alignment per epoch and falls back to the generic
-        shuffle path for feeds still sharded on the old modulus).
+        shard/bucket alignment per epoch and falls back to the fused route
+        for feeds still sharded on the old modulus).
 
         MoR delta layers are resolved by the merged read and folded into the
         fresh base files (a rebucket is also a full compaction). Readers of

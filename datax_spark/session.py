@@ -54,6 +54,10 @@ def get_spark(
         # count; on local SSD/page-cache (and at scale, on object stores with
         # ranged reads) per-file open cost is nowhere near 4 MiB of scan.
         .config("spark.sql.files.openCostInBytes", str(512 * 1024))
+        # LakeTable reads hand Spark the manifest's explicit file list; past
+        # the default threshold (32 paths) Spark stats them in a separate
+        # listing job before the scan, one task per path
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "8192")
         .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
     )
     for k, v in (extra_conf or {}).items():

@@ -4,9 +4,9 @@ first_non_null/last_non_null); deletes and replaces cut the history exactly
 as in partial_update (a replace RESTARTS a running sum at its own value).
 
 Covers the shared Arrow fold with agg_spec (property-tested against a
-brute-force Python oracle), the colocated MoR path across real delta
-layers, layered-vs-flat combinability, compaction, the Catalyst shuffle
-fallback, timestamp max, and create()-time validation.
+brute-force Python oracle), the MoR path across real delta layers,
+layered-vs-flat combinability, compaction, the copy-on-write ``apply_cdc``
+path, timestamp max, and create()-time validation.
 
 Reference analog: DataX has no stateful merge at all (writers are
 replace/update whole-row, WriterUtil.java:111-168); aggregation merge is
@@ -79,13 +79,13 @@ def _state(t):
                       r["origin"]) for r in t.read().collect()}
 
 
-def _apply_all(spark, t, strategy="colocated", mor=False):
+def _apply_all(spark, t, mor=False):
     for batch in (BATCH1, BATCH2, BATCH3):
         if mor:
             t.apply_cdc_stats(_ev(spark, batch), key_cols=["id"],
                               write_mode="mor", compact_threshold=100)
         else:
-            t.apply_cdc(_ev(spark, batch), key_cols=["id"], strategy=strategy)
+            t.apply_cdc(_ev(spark, batch), key_cols=["id"])
 
 
 def test_mor_scan_time_aggregate_fold(spark, tmp_path):
@@ -115,8 +115,10 @@ def test_layered_equals_flat(spark, tmp_path):
 
 
 def test_shuffle_strategy_matches_colocated(spark, tmp_path):
+    """Copy-on-write apply_cdc (every batch rewrites its buckets' base)."""
     t = _mk(spark, tmp_path, "t4")
-    _apply_all(spark, t, strategy="shuffle")
+    _apply_all(spark, t)
+    assert not t.snapshot().has_deltas()
     assert _state(t) == EXPECT
 
 

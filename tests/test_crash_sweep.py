@@ -16,9 +16,9 @@ replay is re-run once per mutation index with an injected crash at exactly
 that point, followed by a clean-engine recovery and a full-state comparison
 against the pure-Python fold oracle (cdc/oracle.py).
 
-Swept paths: the zero-shuffle aligned apply (feed shards == table buckets),
-the fused colocated apply (shards != buckets), and the two-pass shuffle
-strategy — their commit protocols differ, so each gets its own sweep.
+Swept paths: the zero-shuffle aligned apply (feed shards == table buckets)
+and the fused apply (shards != buckets) — both commit through the same
+bucket kernel, but their drivers differ, so each gets its own sweep.
 """
 
 from __future__ import annotations
@@ -109,7 +109,7 @@ def _feed(spark, tmp_path, shards: int) -> str:
 
 
 def _run_once(spark, feed, root, ckpt, fs, monkeypatch, *,
-              n_buckets: int, strategy: str, cfg_extra: dict | None = None,
+              n_buckets: int, cfg_extra: dict | None = None,
               clean_fs=LocalFS):
     """Create table + engine against ``fs`` (checkpoint manifest writes are
     ticked through the same counter) and replay the feed."""
@@ -127,7 +127,7 @@ def _run_once(spark, feed, root, ckpt, fs, monkeypatch, *,
         eng = CdcEngine(
             spark,
             EngineConfig(table_root=root, feed_dir=feed, checkpoint_dir=ckpt,
-                         merge_strategy=strategy, **(cfg_extra or {})),
+                         **(cfg_extra or {})),
             fs=fs,
         )
         eng.run()
@@ -181,7 +181,7 @@ def _assert_recovered_exactly_once(spark, feed, root, ckpt, clean_fs=LocalFS):
 
 
 def _sweep(spark, tmp_path, monkeypatch, *, shards: int, n_buckets: int,
-           strategy: str, step: int = 1, cfg_extra: dict | None = None,
+           step: int = 1, cfg_extra: dict | None = None,
            fs_cls=CrashFS, clean_fs=LocalFS):
     feed = _feed(spark, tmp_path, shards)
 
@@ -189,8 +189,7 @@ def _sweep(spark, tmp_path, monkeypatch, *, shards: int, n_buckets: int,
     dry = fs_cls(budget=None)
     root0, ckpt0 = str(tmp_path / "dry-table"), str(tmp_path / "dry-ckpt")
     _run_once(spark, feed, root0, ckpt0, dry, monkeypatch,
-              n_buckets=n_buckets, strategy=strategy, cfg_extra=cfg_extra,
-              clean_fs=clean_fs)
+              n_buckets=n_buckets, cfg_extra=cfg_extra, clean_fs=clean_fs)
     total = dry.mutations
     assert total > 10, f"seam not exercised: only {total} mutations"
     _assert_recovered_exactly_once(spark, feed, root0, ckpt0,
@@ -203,8 +202,8 @@ def _sweep(spark, tmp_path, monkeypatch, *, shards: int, n_buckets: int,
         fs = fs_cls(budget=budget)
         try:
             _run_once(spark, feed, root, ckpt, fs, monkeypatch,
-                      n_buckets=n_buckets, strategy=strategy,
-                      cfg_extra=cfg_extra, clean_fs=clean_fs)
+                      n_buckets=n_buckets, cfg_extra=cfg_extra,
+                      clean_fs=clean_fs)
         except InjectedCrash:
             pass
         try:
@@ -222,20 +221,12 @@ def _sweep(spark, tmp_path, monkeypatch, *, shards: int, n_buckets: int,
 
 def test_crash_sweep_aligned(spark, tmp_path, monkeypatch):
     """Every metadata-write crash point on the zero-shuffle aligned path."""
-    _sweep(spark, tmp_path, monkeypatch, shards=8, n_buckets=8,
-           strategy="colocated")
+    _sweep(spark, tmp_path, monkeypatch, shards=8, n_buckets=8)
 
 
 def test_crash_sweep_fused_generic(spark, tmp_path, monkeypatch):
-    """Fused colocated path with shards != buckets (events-only shuffle)."""
-    _sweep(spark, tmp_path, monkeypatch, shards=8, n_buckets=4,
-           strategy="colocated", step=2)
-
-
-def test_crash_sweep_shuffle_strategy(spark, tmp_path, monkeypatch):
-    """Two-pass shuffle strategy (stats job, then apply)."""
-    _sweep(spark, tmp_path, monkeypatch, shards=8, n_buckets=4,
-           strategy="shuffle", step=2)
+    """Fused path with shards != buckets (events-only shuffle)."""
+    _sweep(spark, tmp_path, monkeypatch, shards=8, n_buckets=4, step=2)
 
 
 def test_crash_sweep_with_maintenance(spark, tmp_path, monkeypatch):
@@ -243,8 +234,7 @@ def test_crash_sweep_with_maintenance(spark, tmp_path, monkeypatch):
     (compact commits after every epoch) and snapshot vacuum (remove()s of
     expired versions) extend the mutation schedule — a crash inside either
     must never lose or duplicate applied state."""
-    _sweep(spark, tmp_path, monkeypatch, shards=8, n_buckets=8,
-           strategy="colocated", step=2,
+    _sweep(spark, tmp_path, monkeypatch, shards=8, n_buckets=8, step=2,
            cfg_extra={"cluster_every": 1, "vacuum_keep_last": 2})
 
 
@@ -257,8 +247,7 @@ def test_crash_sweep_objectstore_backend(spark, tmp_path, monkeypatch):
     def clean_fs():
         return ObjectFS(LocalEmulatedObjectStore())
 
-    _sweep(spark, tmp_path, monkeypatch, shards=8, n_buckets=8,
-           strategy="colocated", step=2,
+    _sweep(spark, tmp_path, monkeypatch, shards=8, n_buckets=8, step=2,
            fs_cls=CrashObjectFS, clean_fs=clean_fs)
 
 
@@ -270,8 +259,7 @@ def test_double_crash_recovery(spark, tmp_path, monkeypatch):
 
     dry = CrashFS(budget=None)
     root0, ckpt0 = str(tmp_path / "dd-table"), str(tmp_path / "dd-ckpt")
-    _run_once(spark, feed, root0, ckpt0, dry, monkeypatch,
-              n_buckets=8, strategy="colocated")
+    _run_once(spark, feed, root0, ckpt0, dry, monkeypatch, n_buckets=8)
     total = dry.mutations
 
     failures = []
@@ -282,12 +270,12 @@ def test_double_crash_recovery(spark, tmp_path, monkeypatch):
             ckpt = str(tmp_path / f"{tag}-ckpt")
             try:
                 _run_once(spark, feed, root, ckpt, CrashFS(budget=n1),
-                          monkeypatch, n_buckets=8, strategy="colocated")
+                          monkeypatch, n_buckets=8)
             except InjectedCrash:
                 pass
             try:  # recovery attempt that itself crashes
                 _run_once(spark, feed, root, ckpt, CrashFS(budget=n2),
-                          monkeypatch, n_buckets=8, strategy="colocated")
+                          monkeypatch, n_buckets=8)
             except InjectedCrash:
                 pass
             except FileExistsError:

@@ -79,6 +79,25 @@ def test_one_job_one_stage_per_kernel_op(spark, mor_engine):
     assert t.read().toArrow().num_rows == full.num_rows
 
 
+def test_base_only_read_of_many_files_is_one_job(spark, tmp_path):
+    """A base-only scan hands Spark the manifest's explicit file list; past
+    Spark's parallel-listing threshold (32 paths by default) that list would
+    be stat'ed in a listing job of its own before the scan."""
+    t = LakeTable.create(spark, str(tmp_path / "t64"), TRANSCRIPTS_SCHEMA_V1,
+                         bucket_key="conv_id", n_buckets=64)
+    t.append(spark.range(2000).selectExpr(
+        "concat('c', cast(id as string)) as conv_id", "0 as turn_idx",
+        "'user' as role", "'hi' as text",
+        "cast(null as timestamp) as ts"))
+    snap = t.snapshot()
+    assert not snap.has_deltas()
+    assert sum(len(fl) for fl in snap.files.values()) == 64
+    full, jobs, stages = _jobs_and_stages(
+        spark, "dsx-read64", lambda: t.read().toArrow())
+    assert full.num_rows == 2000
+    assert (jobs, stages) == (1, 1)
+
+
 def test_lpt_groups_cover_each_bucket_once():
     buckets = list(range(37))
     sizes = {b: (b * 7919) % 101 + 1 for b in buckets}

@@ -83,7 +83,7 @@ def test_pruned_delta_file_is_never_opened(spark, tmp_path):
     _cdc(t, _rows(spark, [f"a{i:02d}" for i in range(20)]), seq=1)
     # second apply lands as a DELTA layer (mor) with keys n00..n19 only
     _cdc(t, _rows(spark, [f"n{i:02d}" for i in range(20)], text="y"),
-         seq=2, strategy="colocated")
+         seq=2)
     snap = t.snapshot()
     deltas = [f for fl in snap.files.values() for f in fl
               if f.get("kind") == "delta"]

@@ -1,6 +1,8 @@
-"""The two MERGE physical strategies (colocated Arrow merge vs Catalyst
-union-LWW shuffle fold) must produce identical final tables."""
+"""Engine replay through the bucket kernel must reproduce the pure-Python
+fold oracle (cdc/oracle.py), and a bucket whose keys are all deleted must
+end with no files."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from datax_spark.cdc.engine import CdcEngine, EngineConfig
@@ -10,45 +12,38 @@ from datax_spark.cdc.schema import TRANSCRIPTS_SCHEMA_V1
 from datax_spark.lake.table import LakeTable
 
 
-def _replay(spark, tmp_path, feed, strategy):
-    root = str(tmp_path / f"table-{strategy}")
+def test_strategies_equivalent_and_match_oracle(spark, tmp_path):
+    """One replay (fused route: 8 buckets, default 32 feed shards) with
+    deletes, resurrections and dirty events, row for row against the
+    oracle."""
+    feed = str(tmp_path / "feed")
+    spec = ChangeFeedSpec(seed=99, n_convs=150, n_epochs=3, update_rate=0.8,
+                          delete_prob=0.15, resurrect_prob=0.4, dirty_frac=0.01)
+    generate_change_feed(spark, feed, spec)
+
+    root = str(tmp_path / "table")
     LakeTable.create(spark, root, TRANSCRIPTS_SCHEMA_V1, bucket_key="conv_id", n_buckets=8)
     engine = CdcEngine(
         spark,
-        EngineConfig(
-            table_root=root,
-            feed_dir=feed,
-            checkpoint_dir=str(tmp_path / f"ckpt-{strategy}"),
-            merge_strategy=strategy,
-        ),
+        EngineConfig(table_root=root, feed_dir=feed,
+                     checkpoint_dir=str(tmp_path / "ckpt")),
     )
     engine.run()
-    return [
+    got = [
         tuple(r)
         for r in engine.table.read()
         .select("conv_id", "turn_idx", "role", "text", "tool", "ts")
         .orderBy("conv_id", "turn_idx")
         .collect()
     ]
-
-
-def test_strategies_equivalent_and_match_oracle(spark, tmp_path):
-    feed = str(tmp_path / "feed")
-    spec = ChangeFeedSpec(seed=99, n_convs=150, n_epochs=3, update_rate=0.8,
-                          delete_prob=0.15, resurrect_prob=0.4, dirty_frac=0.01)
-    generate_change_feed(spark, feed, spec)
-
-    colocated = _replay(spark, tmp_path, feed, "colocated")
-    shuffle = _replay(spark, tmp_path, feed, "shuffle")
-    assert colocated == shuffle
-    assert len(colocated) > 0
+    assert len(got) > 0
 
     expect = fold_feed(feed)
-    assert len(colocated) == len(expect)
-    for got, exp in zip(colocated, expect):
-        assert got[0] == exp["conv_id"] and got[1] == exp["turn_idx"]
-        assert got[3] == exp["text"]
-        assert got[4] == exp["tool"]
+    assert len(got) == len(expect)
+    for g, exp in zip(got, expect):
+        assert g[0] == exp["conv_id"] and g[1] == exp["turn_idx"]
+        assert g[3] == exp["text"]
+        assert g[4] == exp["tool"]
 
 
 def test_colocated_delete_all_rows_in_bucket(spark, tmp_path):
@@ -64,5 +59,14 @@ def test_colocated_delete_all_rows_in_bucket(spark, tmp_path):
         "conv_id", "turn_idx", "role", "text", "ts",
         F.lit("D").alias("op"), F.lit(1).cast("long").alias("seq"),
     )
-    t.apply_cdc(deletes, key_cols=["conv_id", "turn_idx"], strategy="colocated")
+    t.apply_cdc(deletes, key_cols=["conv_id", "turn_idx"])
     assert t.read().count() == 0
+    assert not any(t.snapshot().files.values())
+
+
+@pytest.mark.parametrize("knob", [{"merge_salts": 8}, {"merge_strategy": "shuffle"}])
+def test_removed_merge_knobs_are_rejected(knob):
+    """Route-selection knobs no longer exist: passing one fails loudly
+    instead of being silently ignored."""
+    with pytest.raises(TypeError):
+        EngineConfig(table_root="t", feed_dir="f", checkpoint_dir="c", **knob)

@@ -3,8 +3,8 @@ an upsert patches only its non-null columns, deletes cut the history,
 the reserved replace op contributes a full row and cuts older layers.
 
 Covers the shared Arrow fold (property-tested against a brute-force Python
-oracle), the colocated MoR path (delta layers + scan-time fold), compaction,
-the Catalyst shuffle fallback, lookup, schema evolution, and changelog
+oracle), the MoR path (delta layers + scan-time fold), the copy-on-write
+``apply_cdc`` path, compaction, lookup, schema evolution, and changelog
 post-images through the forced diff path.
 
 Reference analog: DataX writers overwrite whole rows (replace/update modes,
@@ -65,7 +65,7 @@ def _state(t):
     return {r["id"]: (r["a"], r["b"], r["c"]) for r in t.read().collect()}
 
 
-def _apply_all(spark, t, strategy="colocated", mor=False):
+def _apply_all(spark, t, mor=False):
     for batch in (BATCH1, BATCH2, BATCH3):
         if mor:
             # MoR delta layers (compact_threshold high so they persist):
@@ -73,7 +73,7 @@ def _apply_all(spark, t, strategy="colocated", mor=False):
             t.apply_cdc_stats(_ev(spark, batch), key_cols=["id"],
                               write_mode="mor", compact_threshold=100)
         else:
-            t.apply_cdc(_ev(spark, batch), key_cols=["id"], strategy=strategy)
+            t.apply_cdc(_ev(spark, batch), key_cols=["id"])
 
 
 def test_colocated_patch_delete_replace_revive(spark, tmp_path):
@@ -95,8 +95,10 @@ def test_compact_preserves_partial_state(spark, tmp_path):
 
 
 def test_shuffle_strategy_matches_colocated(spark, tmp_path):
+    """Copy-on-write apply_cdc (every batch rewrites its buckets' base)."""
     t = _mk(spark, tmp_path, "t3")
-    _apply_all(spark, t, strategy="shuffle")
+    _apply_all(spark, t)
+    assert not t.snapshot().has_deltas()
     assert _state(t) == EXPECT
 
 
@@ -167,10 +169,6 @@ def test_guards(spark, tmp_path):
     with pytest.raises(ValueError, match="merge_mode"):
         LakeTable.create(spark, str(tmp_path / "bad"), SCHEMA, "id",
                          merge_mode="upsert")
-    t = _mk(spark, tmp_path, "t9")
-    with pytest.raises(NotImplementedError, match="salting"):
-        t.apply_cdc(_ev(spark, BATCH1), key_cols=["id"], strategy="shuffle",
-                    n_salts=4)
     bad = LakeTable.create(
         spark, str(tmp_path / "t10"), SCHEMA, "id",
         merge_mode="partial_update",

@@ -5,6 +5,8 @@ from __future__ import annotations
 import json
 import os
 
+import pytest
+
 from datax_spark.cdc.engine import CdcEngine, EngineConfig
 from datax_spark.cdc.generator import ChangeFeedSpec, generate_change_feed
 from datax_spark.cdc.oracle import fold_feed
@@ -64,13 +66,31 @@ def test_crash_between_snapshot_and_manifest(spark, tmp_path):
     engine = _setup(spark, tmp_path, spec)
     engine.run()
     # simulate the crash: delete epoch 1's manifest, keep the table snapshot
-    os.unlink(os.path.join(engine.commits_dir, "epoch-1.json"))
+    path = os.path.join(engine.commits_dir, "epoch-1.json")
+    with open(path) as f:
+        original = json.load(f)
+    os.unlink(path)
     v = engine.table.current_version()
     engine2 = CdcEngine(spark, engine.cfg)
     summary = engine2.run()
     assert engine2.table.current_version() == v  # data NOT re-applied
     assert summary["epochs_applied"] == 1  # manifest re-emitted for epoch 1
     assert engine2.committed_epochs() == [0, 1]
+    # rebuilt from the pending draft: identical but for its own timing
+    with open(path) as f:
+        recovered = json.load(f)
+    timing = ("duration_s", "events_per_sec")
+    assert {k: x for k, x in recovered.items() if k not in timing} == {
+        k: x for k, x in original.items() if k not in timing}
+
+    # a draft left by another epoch cannot finish epoch 1's manifest
+    os.unlink(path)
+    with open(engine.pending_path) as f:
+        draft = json.load(f)
+    with open(engine.pending_path, "w") as f:
+        json.dump({**draft, "epoch": 0}, f)
+    with pytest.raises(RuntimeError, match="epoch 1"):
+        CdcEngine(spark, engine.cfg).run()
 
 
 def test_manifest_lineage_covers_all_events(spark, tmp_path):

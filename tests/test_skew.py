@@ -1,4 +1,5 @@
-"""Hot-key (skew) handling: detection, salted dedupe equivalence, salted MERGE."""
+"""Hot-key (skew) handling: detection, and hot-key reporting on a skewed
+replay that still matches the oracle."""
 
 import os
 
@@ -6,10 +7,9 @@ from pyspark.sql import functions as F
 
 from datax_spark.cdc.engine import CdcEngine, EngineConfig
 from datax_spark.cdc.generator import ChangeFeedSpec, generate_change_feed
-from datax_spark.cdc.merge import dedupe_latest
 from datax_spark.cdc.oracle import fold_feed
 from datax_spark.cdc.schema import TRANSCRIPTS_SCHEMA_V1
-from datax_spark.cdc.skew import detect_hot_keys, repartition_salted, salted_dedupe_latest
+from datax_spark.cdc.skew import detect_hot_keys
 from datax_spark.lake.table import LakeTable
 
 
@@ -39,31 +39,9 @@ def test_detect_hot_keys(spark):
     assert hot[0]["n"] == 5000
 
 
-def test_salted_dedupe_equivalence(spark):
-    batch = _skewed_batch(spark)
-    plain = dedupe_latest(batch, ["conv_id", "turn_idx"], "seq")
-    salted = salted_dedupe_latest(batch, ["conv_id", "turn_idx"], "seq", n_salts=16)
-    a = sorted(plain.collect(), key=lambda r: r["conv_id"])
-    b = sorted(salted.collect(), key=lambda r: r["conv_id"])
-    assert a == b
-    assert len(a) == 50
-
-
-def test_repartition_salted_spreads_hot_key(spark):
-    batch = _skewed_batch(spark).repartition(4)
-    parts = (
-        repartition_salted(batch, "conv_id", 16, n_salts=8, salt_source="seq")
-        .filter(F.col("conv_id") == "conv-0000")
-        .withColumn("pid", F.spark_partition_id())
-        .select("pid")
-        .distinct()
-        .count()
-    )
-    assert parts >= 4  # the hot key spans several tasks instead of one
-
-
-def test_salted_engine_replay_matches_oracle(spark, tmp_path):
-    """Full replay with merge_salts + hot-key manifest reporting == oracle fold."""
+def test_skewed_engine_replay_matches_oracle(spark, tmp_path):
+    """Skewed replay on the default route with hot-key manifest reporting
+    == oracle fold."""
     feed = str(tmp_path / "feed")
     spec = ChangeFeedSpec(seed=7, n_convs=120, n_epochs=3, update_rate=1.5,
                           hot_exponent=0.9, hot_cap=400)
@@ -78,8 +56,6 @@ def test_salted_engine_replay_matches_oracle(spark, tmp_path):
             feed_dir=feed,
             checkpoint_dir=str(tmp_path / "ckpt"),
             hot_key_min_count=50,
-            merge_salts=8,
-            merge_strategy="shuffle",  # exercise the salted Catalyst fold path
         ),
     )
     engine.run()
